@@ -162,10 +162,12 @@ def _preflight_idle(
     away, so the round published ZERO numbers): if the machine never
     settles, RUN ANYWAY and publish with ``clean: false`` + the
     preflight detail. The run monitor still stamps run_clean per
-    attempt, and the cleanliness ratchet already guarantees a dirty
-    run can never overwrite a committed clean BENCH_FULL.json — so a
-    degraded publish is decidable and safe, while a mute bench is a
-    measurement-availability bug. Refusal (exit 3, no stdout JSON) is
+    attempt, and the cleanliness ratchet keeps a dirty run from
+    overwriting a committed clean BENCH_FULL.json only when both were
+    measured at the same sf and the same clean head stamp (a prior
+    stamped ``<rev>-dirty`` names no definite code, so it is never
+    protected) — so a degraded publish is decidable, while a mute
+    bench is a measurement-availability bug. Refusal (exit 3, no stdout JSON) is
     reserved for an explicit SPARK_GRAFT_BENCH_STRICT=1.
     SPARK_GRAFT_BENCH_FORCE=1 skips the settle wait entirely (local
     iteration)."""
@@ -575,8 +577,11 @@ def _ratcheted_publish(
     clean BENCH_FULL.json at the same sf AND the same code revision
     (r16 — a clean artifact from DIFFERENT code must not be republished
     as if it measured HEAD; in that case the honest output is this
-    run's lowest-steal dirty numbers, flagged run_clean: false). When
-    protection applies, the dirty record lands in BENCH_FULL_dirty.json,
+    run's lowest-steal dirty numbers, flagged run_clean: false). A
+    prior stamped ``<rev>-dirty`` is never protected: every uncommitted
+    tree at one HEAD carries that same stamp, so it cannot show that
+    the prior measured this run's code. When protection applies, the
+    dirty record lands in BENCH_FULL_dirty.json,
     the clean file stays, and the previously-published clean attempt is
     returned as ``protected`` to be republished on stdout. Factored out
     of main() so the branches are unit-testable without a live timed
@@ -591,6 +596,7 @@ def _ratcheted_publish(
             if (
                 prev.get("sf") == full.get("sf")
                 and prev.get("head") is not None
+                and not prev["head"].endswith("-dirty")
                 and prev.get("head") == full.get("head")
                 and prev_pub["run_conditions"]["run_clean"]
             ):

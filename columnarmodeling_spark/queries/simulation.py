@@ -828,8 +828,9 @@ def _q122_system(spark: SparkSession, sf_dir: str):
     "platen ramps; the 2D tier is the plane-strain analog): a 3D bond "
     "network (grid join on (x, y) then exact 3D distance filter — the "
     "2D cells are a superset of the 3D ball, so candidates stay "
-    "bounded) advanced 5 steps by simulation/solver3d.py's "
-    "run_solver3d_blocked with z-gravity and local damping. Blocks key "
+    "bounded) advanced 5 steps by simulation/solver.py's "
+    "run_solver_blocked on the 3D state (the solver reads D = 3 from "
+    "its z column) with z-gravity and local damping. Blocks key "
     "on (bx, by, bz) with a 3x3x3 halo; burst steps run in ONE "
     "cogrouped NumPy kernel per round, exactly the 2D scale argument "
     "one dimension up. The oracle unrolls all 5 steps with the full "
@@ -838,10 +839,10 @@ def _q122_system(spark: SparkSession, sf_dir: str):
     tags=("simulation", "E3", "iterative", "scale", "3d"),
 )
 def q122_solver3d_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from columnarmodeling_spark.simulation.solver3d import run_solver3d_blocked
+    from columnarmodeling_spark.simulation.solver import run_solver_blocked
 
     state0, bonds = _q122_system(spark, sf_dir)
-    final = run_solver3d_blocked(
+    final = run_solver_blocked(
         state0, bonds, n_steps=5, k=1.0, dt=0.01, fuse=5,
         gravity=(0.0, 0.0, -0.1), damping=0.4,
     )
@@ -1426,7 +1427,7 @@ _BIAXIAL_BCS = (
     "platen, and two lateral confinement bands; the uniaxial case has "
     "only the first two): the q64 system advanced 5 steps with the "
     "4-block program prescribed in the kernel's velocity-BC stage "
-    "(simulation/solver.py _apply_velocity_bcs — masks on "
+    "(simulation/solver.py _apply_bcs — masks on "
     "start-of-step positions, blocks applied in file order with "
     "later writes winning at band overlaps). Per-particle prescription "
     "is local NumPy masking inside the same cogrouped kernel: no "
@@ -1477,16 +1478,16 @@ _TRIAXIAL_BCS = (
     "three axes, the reference's most general case): the q122 3D "
     "system advanced 5 steps with a z clamp, a driven z platen, and "
     "four lateral faces each prescribing its own axis, through "
-    "solver3d's velocity-BC stage (full 3-axis range boxes, "
-    "_bc_mask). The oracle unrolls the 3-component arithmetic with "
+    "the block kernel's velocity-BC stage (full 3-axis range boxes, "
+    "_apply_bcs). The oracle unrolls the 3-component arithmetic with "
     "the six bands as a last-block-outermost CASE chain — all face programs "
     "hash-checked in one query.",
     tags=("simulation", "E3", "P2", "iterative", "3d"),
 )
 def q139_triaxial_bcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from columnarmodeling_spark.simulation.solver import BoundaryCondition
-    from columnarmodeling_spark.simulation.solver3d import (
-        run_solver3d_blocked,
+    from columnarmodeling_spark.simulation.solver import (
+        BoundaryCondition,
+        run_solver_blocked,
     )
 
     state0, bonds = _q122_system(spark, sf_dir)
@@ -1496,7 +1497,7 @@ def q139_triaxial_bcs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for x0, x1, y0, y1, z0, z1, vx, vy, vz in _TRIAXIAL_BCS
     )
-    final = run_solver3d_blocked(
+    final = run_solver_blocked(
         state0, bonds, n_steps=5, k=1.0, dt=0.01, fuse=5, bcs=bcs
     )
     return final.select(
@@ -2128,7 +2129,7 @@ def _kelvin_voigt_oracle3d(
     "but only the default law was registered): the SAME "
     "_kelvin_voigt_law factory as q205 — the law is dimension-agnostic "
     "by the hook's contract (dist/rest/k/state arrays) — driving "
-    "simulation/solver3d.py's run_solver3d_blocked_breaking over a 3D "
+    "simulation/solver.py's run_solver_blocked_breaking over a 3D "
     "customer-derived bond network for TWO fuse=4 bursts, so the "
     "previous-length ustate provably survives the 3x3x3 halo-exchange "
     "shuffle boundary in 3D (fuse-split bit-equality is also "
@@ -2146,8 +2147,8 @@ def _kelvin_voigt_oracle3d(
 )
 def q212_viscoelastic_bonds_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
     from columnarmodeling_spark.operators.proximity import grid_proximity_join
-    from columnarmodeling_spark.simulation.solver3d import (
-        run_solver3d_blocked_breaking,
+    from columnarmodeling_spark.simulation.solver import (
+        run_solver_blocked_breaking,
     )
 
     c = t(spark, sf_dir, "customer")
@@ -2205,7 +2206,7 @@ def q212_viscoelastic_bonds_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # live bond <= (1 + eps_b) * rest; max rest <= 1.15 * 60 = 69.0
     reach = 1.05 * (1.0 + _KV_EPS_B) * 69.0
-    _, bond_log = run_solver3d_blocked_breaking(
+    _, bond_log = run_solver_blocked_breaking(
         state0,
         bonds,
         n_steps=8,
@@ -2353,9 +2354,10 @@ def _softening_oracle3d(
     "q205 = Kelvin-Voigt 2D, q212 = Kelvin-Voigt 3D): the SAME "
     "bilinear_softening_law kernel (dimension-agnostic by the hook's "
     "dist/rest/strength/ustate contract) driving "
-    "simulation/solver3d.py's run_solver3d_blocked_breaking, with the "
-    "IRREVERSIBLE max-strain damage state riding the bond column "
-    "across the 3x3x3 halo-exchange shuffle for two fuse=4 bursts. "
+    "simulation/solver.py's run_solver_blocked_breaking on a 3D "
+    "state, with the IRREVERSIBLE max-strain damage state riding the "
+    "bond column across the 3x3x3 halo-exchange shuffle for two "
+    "fuse=4 bursts. "
     "Scenario: q212's 3D point cloud and velocities, yield strain "
     "12%, ultimate 24% (breaks), damaged-secant unloading in between. "
     "Output per input bond: break step (-1 = survived) and the "
@@ -2371,9 +2373,7 @@ def q292_softening_bonds_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
     from columnarmodeling_spark.operators.proximity import grid_proximity_join
     from columnarmodeling_spark.simulation.solver import (
         bilinear_softening_law,
-    )
-    from columnarmodeling_spark.simulation.solver3d import (
-        run_solver3d_blocked_breaking,
+        run_solver_blocked_breaking,
     )
 
     c = t(spark, sf_dir, "customer")
@@ -2429,7 +2429,7 @@ def q292_softening_bonds_3d(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a live bond survives to strain < eps_u = 2*eps_y; max rest <=
     # 1.15 * 60 = 69.0, with the usual 1.05 margin
     reach = 1.05 * (1.0 + 2.0 * _SOFT_EPS_Y) * 69.0
-    _, bond_log = run_solver3d_blocked_breaking(
+    _, bond_log = run_solver_blocked_breaking(
         state0,
         bonds,
         n_steps=8,

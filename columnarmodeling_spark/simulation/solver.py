@@ -22,11 +22,23 @@ same discipline as Lloyd/connected-components). At 100 TB the state
 shuffle is keyed by particle id and the bond join by src id — both
 pre-partitionable (bucketing) so steady-state steps reuse partitioning.
 OpenMP threads (``CORENUM.txt``) map to executor cores.
+
+Every solver here is dimension-generic over the spatial axes of the
+input state: ``x, y`` (the plane-strain tier) or ``x, y, z`` (the
+reference's native 3D — ``BALL3D_PSLICE.dat`` particles, 3-axis
+``MLSLD00.dat`` range boxes). The dimension D is read from the schema
+(``"z" in state.columns``); velocities are ``v<axis>``, gravity is a
+D-vector, block keys are ``b<axis>`` and the halo replicates each block
+into its 3^D neighbours. A 3D state confined to ``z = vz = 0`` gives
+bit-for-bit the 2D results (pinned in tests/test_solver3d.py).
 """
 
 from __future__ import annotations
 
+import functools
+import itertools
 import math
+import operator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -39,14 +51,14 @@ from pyspark.sql import functions as F
 # Model", ``UniaxialCompressionTest/UDM.dll``, loaded beside the exe;
 # SURVEY §2.9): a user-supplied constitutive law replaces the built-in
 # spring update without touching the solver. The engine analog is a
-# vectorized per-bond callable plugged into the blocked kernels:
+# vectorized per-bond callable plugged into the blocked kernel:
 #
 #   law(dist, rest, k, strength, ustate, alive)
 #       -> (mag, just_broke, new_ustate)
 #
 # All inputs are aligned NumPy float64/bool arrays, one element per
 # local bond replica; the law must be PURE and element-wise (the same
-# bond is evaluated in up to 9 halo replicas, which stay bit-identical
+# bond is evaluated in up to 3^D halo replicas, which stay bit-identical
 # only if the law depends on nothing but its arguments):
 #
 #   dist     current endpoint distance
@@ -79,20 +91,19 @@ def _checked_positions(sorted_ids, wanted):
     physics) or indexes out of range with an opaque IndexError; the old
     per-bond dict lookup raised KeyError. The eb membership join
     guarantees presence, so this is a halo-invariant guard, not a code
-    path — two vectorized compares per bond per round (r15 ADVICE)."""
+    path — two vectorized compares per bond per round (r15 ADVICE). An
+    empty *sorted_ids* holds none of *wanted*."""
     import numpy as np
 
     pos = np.searchsorted(sorted_ids, wanted)
     n = len(sorted_ids)
-    if pos.size and (
-        (pos >= n).any() or (sorted_ids[np.minimum(pos, n - 1)] != wanted).any()
-    ):
-        missing = wanted[
-            (pos >= n) | (sorted_ids[np.minimum(pos, n - 1)] != wanted)
-        ]
+    missing = pos >= n
+    if n:
+        missing |= sorted_ids[np.minimum(pos, n - 1)] != wanted
+    if missing.any():
         raise KeyError(
             "bond endpoint id(s) missing from block particle set "
-            f"(halo invariant violated): {missing[:5].tolist()}"
+            f"(halo invariant violated): {wanted[missing][:5].tolist()}"
         )
     return pos
 
@@ -176,7 +187,7 @@ class BoundaryCondition:
     clamp on the bottom slab and a ``-20``-valued velocity BC on the
     top platen whose displacement ramps as ``-20·t`` (the E-series
     shape). *curve* is a tuple of ``(t, scale)`` control points; the
-    applied value at solver time ``t`` is ``(vx, vy) ×
+    applied value at solver time ``t`` is ``(vx, vy[, vz]) ×
     piecewise_linear(curve, t)``, clamped to the endpoint values
     outside the curve domain (same semantics as
     ``operators/load_curves.interpolate_curves``). ``curve=None``
@@ -187,8 +198,8 @@ class BoundaryCondition:
     x1: float = math.inf
     y0: float = -math.inf
     y1: float = math.inf
-    # z range + z value: used by the 3D solver (solver3d.py); the 2D
-    # kernels ignore them, so 2D call sites are unchanged
+    # z range + z value: read only for a 3D state (one with a z
+    # column); a 2D state ignores them, so 2D call sites leave them unset
     z0: float = -math.inf
     z1: float = math.inf
     # the reference's five SysFile.ini BC families (Displacement is
@@ -205,19 +216,6 @@ class BoundaryCondition:
     c: float = 0.0  # nonreflection damper coefficient
     curve: tuple[tuple[float, float], ...] | None = None
 
-    def scale_at(self, t: float) -> float:
-        if not self.curve:
-            return 1.0
-        import numpy as np
-
-        return float(
-            np.interp(
-                t,
-                [p[0] for p in self.curve],
-                [p[1] for p in self.curve],
-            )
-        )
-
 
 def _curve_scale(curve, t: float) -> float:
     """Piecewise-linear curve evaluation, endpoint-clamped — shared by
@@ -230,46 +228,6 @@ def _curve_scale(curve, t: float) -> float:
     return float(
         np.interp(t, [p[0] for p in curve], [p[1] for p in curve])
     )
-
-
-def _apply_force_bcs(bcs, x, y, vx, vy, fx, fy, t_now):
-    """Force-stage BCs, shared by both block kernels so the arithmetic
-    stays identical: 'force' adds the (curve-scaled) value, and
-    'nonreflection' subtracts c·v (the absorbing-boundary damper).
-    Masks use start-of-step positions — bit-exact in every halo
-    replica."""
-    for bc in bcs:
-        if bc.kind not in ("force", "nonreflection"):
-            continue
-        msk = (x >= bc.x0) & (x <= bc.x1) & (y >= bc.y0) & (y <= bc.y1)
-        s = bc.scale_at(t_now)
-        if bc.kind == "force":
-            fx[msk] += bc.vx * s
-            fy[msk] += bc.vy * s
-        else:
-            fx[msk] -= bc.c * s * vx[msk]
-            fy[msk] -= bc.c * s * vy[msk]
-
-
-def _apply_velocity_bcs(bcs, x, y, vx, vy, t_now, dt):
-    """Velocity-stage BCs (after force integration): 'acceleration'
-    adds a·dt, then 'velocity' prescribes — prescription wins when both
-    target the same particle, matching the reference's block order
-    (MLSLD00.dat blocks apply in file order, velocity platens last)."""
-    for bc in bcs:
-        if bc.kind != "acceleration":
-            continue
-        msk = (x >= bc.x0) & (x <= bc.x1) & (y >= bc.y0) & (y <= bc.y1)
-        s = bc.scale_at(t_now)
-        vx[msk] += bc.vx * s * dt
-        vy[msk] += bc.vy * s * dt
-    for bc in bcs:
-        if bc.kind != "velocity":
-            continue
-        msk = (x >= bc.x0) & (x <= bc.x1) & (y >= bc.y0) & (y <= bc.y1)
-        s = bc.scale_at(t_now)
-        vx[msk] = bc.vx * s
-        vy[msk] = bc.vy * s
 
 
 def weibull_strengths(
@@ -345,14 +303,290 @@ def bond_stiffness_from_materials(
     )
 
 
+# --- dimension-generic helpers -------------------------------------------
+
+_LOG_COLS = ("src", "dst", "rest", "strength", "k", "break_step", "ustate")
+_BOND_COLS = ("src", "dst", "rest", "strength", "k", "ustate")
+_TYPES = {
+    "kind": "int", "id": "long", "owned": "boolean",
+    "src": "long", "dst": "long", "break_step": "long",
+}
+
+
+def _axes(state: DataFrame) -> tuple[str, ...]:
+    """Spatial axes of *state*: ``x, y, z`` if it has a z column, else
+    ``x, y``."""
+    return ("x", "y", "z") if "z" in state.columns else ("x", "y")
+
+
+def _state_cols(axes) -> list[str]:
+    return ["id", *axes, *("v" + a for a in axes), "m"]
+
+
+def _schema(cols) -> str:
+    return ", ".join(f"{c} {_TYPES.get(c, 'double')}" for c in cols)
+
+
+def _gravity(gravity, axes) -> tuple[float, ...]:
+    """The gravity D-vector as floats; ``None`` = no gravity."""
+    if gravity is None:
+        return (0.0,) * len(axes)
+    if len(gravity) != len(axes):
+        raise ValueError(
+            f"gravity {tuple(gravity)} has {len(gravity)} components; "
+            f"the state has {len(axes)} axes {axes}"
+        )
+    return tuple(float(g) for g in gravity)
+
+
+def _all(conds):
+    return functools.reduce(operator.and_, conds)
+
+
+def _apply_bcs(bcs, kinds, axes, pos, vel, f, t_now, dt):
+    """Apply, in file order, every BC whose kind is in *kinds*: 'force'
+    adds the (curve-scaled) value to *f*, 'nonreflection' subtracts
+    c·v (the absorbing-boundary damper), 'acceleration' adds a·dt to
+    the velocity and 'velocity' prescribes it. Range-box masks use the
+    positions as passed (start-of-step) — bit-exact in every halo
+    replica. Values per axis come from ``bc.v<axis>``."""
+    for bc in bcs:
+        if bc.kind not in kinds:
+            continue
+        msk = _all(
+            (p >= getattr(bc, a + "0")) & (p <= getattr(bc, a + "1"))
+            for a, p in zip(axes, pos)
+        )
+        s = _curve_scale(bc.curve, t_now)
+        for j, a in enumerate(axes):
+            val = getattr(bc, "v" + a) * s
+            if bc.kind == "force":
+                f[j][msk] += val
+            elif bc.kind == "nonreflection":
+                f[j][msk] -= bc.c * s * vel[j][msk]
+            elif bc.kind == "acceleration":
+                vel[j][msk] += val * dt
+            else:
+                vel[j][msk] = val
+
+
+def _make_kernel(
+    axes, bond_cols, breaking, burst, step0, k, dt, law, bcs, gravity,
+    gravity_curve, damping,
+):
+    """The cogrouped NumPy kernel of one block: ``burst`` explicit-Euler
+    sub-steps over the block's particle replicas and local bonds.
+
+    Per-sub-step force order (mirrored exactly by the DuckDB oracles):
+    spring forces from *law* (per-bond ``k`` column if present, else
+    scalar *k*) → gravity ``g·m·scale(t)`` (MLS00con.dat Gx/Gy, spin-up
+    curve) → force/nonreflection BCs → local damping
+    ``f -= Dp·|f|·sign(v)`` per component (MLS00con.dat Dp) → integrate
+    → acceleration/velocity BCs (prescription wins, matching the
+    reference's block order) → advance positions. Gravity, damping and
+    the BC masks are all per-particle-local, so the halo invariant is
+    untouched; curve time is the global end-of-step time
+    ``(step0 + i + 1)·dt``, identical in every replica.
+
+    The elastic kernel (*breaking* false) ignores any break verdict,
+    starts ``ustate`` at 0 each round and returns the particles with
+    their ``owned`` flag. The breaking kernel records ``break_step``,
+    drops broken bonds from the force sum, and also emits each local
+    bond exactly once — by the replica that owns its ``src`` — as a
+    ``kind = 1`` row next to the ``kind = 0`` particle rows."""
+    import pandas as pd
+
+    cols = _state_cols(axes)
+    vaxes = ["v" + a for a in axes]
+    out_cols = (
+        ["kind", *cols, "owned", *_LOG_COLS] if breaking else [*cols, "owned"]
+    )
+    has_g = any(g != 0.0 for g in gravity)
+
+    def kernel(parts: pd.DataFrame, local_bonds: pd.DataFrame):
+        if parts.empty:
+            return pd.DataFrame(columns=out_cols)
+        import numpy as np
+
+        def bond_col(c, dtype):
+            if local_bonds.empty:
+                return np.empty(0, dtype=dtype)
+            return local_bonds[c].to_numpy(dtype=dtype)
+
+        ids = parts["id"].to_numpy()
+        pos = [parts[a].to_numpy(dtype=np.float64).copy() for a in axes]
+        vel = [parts[v].to_numpy(dtype=np.float64).copy() for v in vaxes]
+        m = parts["m"].to_numpy(dtype=np.float64)
+        owned = parts["owned"].to_numpy()
+        b = {c: bond_col(c, np.int64) for c in ("src", "dst")}
+        b.update((c, bond_col(c, np.float64)) for c in bond_cols)
+        # vectorized id -> row-index mapping (sorted ids + searchsorted):
+        # same values as the old per-bond dict lookup, ~4x faster per
+        # round (r15 microbench)
+        order = np.argsort(ids, kind="stable")
+        sorted_ids = ids[order]
+        src = order[_checked_positions(sorted_ids, b["src"])]
+        dst = order[_checked_positions(sorted_ids, b["dst"])]
+        rest = b["rest"]
+        if breaking:
+            kk, strength, ustate = b["k"], b["strength"], b["ustate"].copy()
+            break_step = np.full(len(src), -1, dtype=np.int64)
+        else:
+            kk, strength = b.get("k", k), None
+            ustate = np.zeros(len(src), dtype=np.float64)
+        alive = np.ones(len(src), dtype=bool)
+        for s_i in range(burst):
+            d = [p[dst] - p[src] for p in pos]
+            dist = np.sqrt(functools.reduce(operator.add, (e * e for e in d)))
+            # pluggable constitutive law (UDM analog): verdicts and
+            # state updates depend only on bit-exact halo inputs, so
+            # every replica of a bond stays in lockstep
+            mag, just_broke, ustate = law(
+                dist, rest, kk, strength, ustate, alive
+            )
+            if breaking:
+                if just_broke is None:
+                    just_broke = np.zeros(len(src), dtype=bool)
+                break_step[just_broke] = step0 + s_i + 1
+                alive &= ~just_broke
+            f = []
+            for e in d:
+                fa = np.zeros_like(m)
+                np.add.at(fa, src, mag * e)
+                np.add.at(fa, dst, -mag * e)
+                f.append(fa)
+            t_now = (step0 + s_i + 1) * dt
+            if has_g:
+                g_s = _curve_scale(gravity_curve, t_now)
+                for fa, g in zip(f, gravity):
+                    fa += g * g_s * m
+            if bcs:
+                _apply_bcs(
+                    bcs, ("force", "nonreflection"), axes, pos, vel, f,
+                    t_now, dt,
+                )
+            if damping != 0.0:
+                for fa, va in zip(f, vel):
+                    fa -= damping * np.abs(fa) * np.sign(va)
+            for fa, va in zip(f, vel):
+                va += fa / m * dt
+            if bcs:
+                for kind in ("acceleration", "velocity"):
+                    _apply_bcs(bcs, (kind,), axes, pos, vel, None, t_now, dt)
+            for p, va in zip(pos, vel):
+                p += va * dt
+        parts_out = {
+            "id": ids, **dict(zip(axes, pos)), **dict(zip(vaxes, vel)),
+            "m": m, "owned": owned,
+        }
+        if not breaking:
+            return pd.DataFrame(parts_out)
+        p_out = pd.DataFrame(
+            {
+                "kind": 0, **parts_out, "src": -1, "dst": -1, "rest": 0.0,
+                "strength": 0.0, "k": 0.0, "break_step": -1, "ustate": 0.0,
+            }
+        )
+        # exactly-once bond emission: the replica owning `src` reports
+        emit = owned[src]
+        b_out = pd.DataFrame(
+            {
+                "kind": 1, "id": -1, **dict.fromkeys(cols[1:], 0.0),
+                "owned": True,
+                "src": b["src"][emit], "dst": b["dst"][emit],
+                "rest": rest[emit], "strength": strength[emit],
+                "k": kk[emit], "break_step": break_step[emit],
+                "ustate": ustate[emit],
+            }
+        )
+        return pd.concat([p_out, b_out], ignore_index=True)[out_cols]
+
+    return kernel
+
+
+def _halo_relations(state, bonds, bond_cols, block, halo, axes):
+    """The two cogroup inputs of one halo-exchange round, keyed by the
+    block columns ``b<axis>`` (returned as the third element):
+
+    ``rep`` — every particle in its owner block (``owned``) plus a copy
+    in each of the 3^D - 1 neighbour blocks whose expanded bounds
+    (block ± *halo*) contain it;
+
+    ``eb`` — the bonds whose BOTH ends live in the same block replica,
+    derived directly from endpoint positions (r16, guide §2.3/§3): join
+    the 1x state relation twice (src/dst positions), enumerate the 3^D
+    candidate blocks around the src owner, and re-apply rep's EXACT
+    membership predicate to both endpoints (owner match, or in-halo
+    AND within ±1 of the endpoint's own owner — the explode bound).
+    Identical (bond, block) set to a double join against the exploded
+    rep, with 3^D-times smaller join inputs."""
+    keys = ["b" + a for a in axes]
+    offs = F.array(
+        *[
+            F.struct(*[F.lit(o).alias("d" + a) for o, a in zip(off, axes)])
+            for off in itertools.product((-1, 0, 1), repeat=len(axes))
+        ]
+    )
+
+    def in_halo(coords):
+        return _all(
+            cond
+            for a, c in zip(axes, coords)
+            for cond in (
+                c >= F.col("b" + a) * block - halo,
+                c < (F.col("b" + a) + 1) * block + halo,
+            )
+        )
+
+    home = _all(F.col("__o.d" + a) == 0 for a in axes)
+    rep = state
+    for a in axes:
+        rep = rep.withColumn("__b" + a, F.floor(F.col(a) / F.lit(block)))
+    rep = rep.withColumn("__o", F.explode(offs))
+    for a in axes:
+        rep = rep.withColumn("b" + a, F.col("__b" + a) + F.col("__o.d" + a))
+    rep = (
+        rep.withColumn("owned", home)
+        .filter(F.col("owned") | in_halo([F.col(a) for a in axes]))
+        .select(*_state_cols(axes), *keys, "owned")
+    )
+    sp = state.select(
+        F.col("id").alias("src"), *[F.col(a).alias("__s" + a) for a in axes]
+    )
+    dp = state.select(
+        F.col("id").alias("dst"), *[F.col(a).alias("__d" + a) for a in axes]
+    )
+    sc = [F.col("__s" + a) for a in axes]
+    dc = [F.col("__d" + a) for a in axes]
+    dob = [F.floor(c / F.lit(block)) for c in dc]
+    mem_s = home | in_halo(sc)
+    mem_d = _all(o == F.col(key) for o, key in zip(dob, keys)) | _all(
+        [in_halo(dc)]
+        + [F.abs(F.col(key) - o) <= 1 for o, key in zip(dob, keys)]
+    )
+    eb = bonds.join(sp, "src").join(dp, "dst").withColumn(
+        "__o", F.explode(offs)
+    )
+    for a, c in zip(axes, sc):
+        eb = eb.withColumn(
+            "b" + a, F.floor(c / F.lit(block)) + F.col("__o.d" + a)
+        )
+    eb = eb.filter(mem_s & mem_d).select("src", "dst", *bond_cols, *keys)
+    return rep, eb, keys
+
+
+# --- DataFrame reference solver (the tests' oracle) ----------------------
+
+
 def spring_forces(state: DataFrame, bonds: DataFrame, k: float) -> DataFrame:
     """Per-particle net spring force from the bond edge list.
 
-    *state*: ``id, x, y, vx, vy, m``; *bonds*: ``src, dst, rest`` (one
-    row per undirected bond; an optional ``k`` column gives per-bond
-    stiffness — MLSMat00.dat material heterogeneity — and overrides the
-    scalar *k*). Returns ``id, fx, fy``.
+    *state*: ``id, x, y[, z], vx, vy[, vz], m``; *bonds*: ``src, dst,
+    rest`` (one row per undirected bond; an optional ``k`` column gives
+    per-bond stiffness — MLSMat00.dat material heterogeneity — and
+    overrides the scalar *k*). Returns ``id, fx, fy[, fz]``.
     """
+    axes = _axes(state)
     has_k = "k" in bonds.columns
     bcols = ["src", "dst", "rest"] + (["k"] if has_k else [])
     both = bonds.select(*bcols).union(
@@ -364,25 +598,29 @@ def spring_forces(state: DataFrame, bonds: DataFrame, k: float) -> DataFrame:
         )
     )
     a = state.select(
-        F.col("id").alias("src"), F.col("x").alias("ax"), F.col("y").alias("ay")
+        F.col("id").alias("src"), *[F.col(c).alias("a" + c) for c in axes]
     )
     b = state.select(
-        F.col("id").alias("dst"), F.col("x").alias("bx"), F.col("y").alias("by")
+        F.col("id").alias("dst"), *[F.col(c).alias("b" + c) for c in axes]
     )
     e = both.join(a, "src").join(b, "dst")
-    dx, dy = F.col("bx") - F.col("ax"), F.col("by") - F.col("ay")
-    dist = F.sqrt(dx * dx + dy * dy)
+    d = [F.col("b" + c) - F.col("a" + c) for c in axes]
+    dist = F.sqrt(functools.reduce(operator.add, [x * x for x in d]))
     # force on src toward dst when stretched (dist > rest); coincident
     # particles (dist = 0) have no defined bond axis and exert no force —
     # the guard also keeps ANSI mode from raising DIVIDE_BY_ZERO
     mag = (F.col("k") if has_k else F.lit(k)) * (dist - F.col("rest"))
-    ux = F.when(dist > 0, dx / dist).otherwise(F.lit(0.0))
-    uy = F.when(dist > 0, dy / dist).otherwise(F.lit(0.0))
-    fx, fy = mag * ux, mag * uy
     return (
-        e.select(F.col("src").alias("id"), fx.alias("fx"), fy.alias("fy"))
+        e.select(
+            F.col("src").alias("id"),
+            *[
+                (mag * F.when(dist > 0, x / dist).otherwise(F.lit(0.0)))
+                .alias("f" + c)
+                for x, c in zip(d, axes)
+            ],
+        )
         .groupBy("id")
-        .agg(F.sum("fx").alias("fx"), F.sum("fy").alias("fy"))
+        .agg(*[F.sum("f" + c).alias("f" + c) for c in axes])
     )
 
 
@@ -391,30 +629,28 @@ def step(
     bonds: DataFrame,
     k: float,
     dt: float,
-    gravity: tuple[float, float] = (0.0, 0.0),
+    gravity: tuple[float, ...] | None = None,
     damping: float = 0.0,
 ) -> DataFrame:
     """One explicit-Euler step; returns the next state DataFrame.
 
-    Force order matches the block kernels exactly: springs → gravity
+    Force order matches the block kernel exactly: springs → gravity
     ``g·m`` → local damping ``f -= Dp·|f|·sign(v)`` (MLS00con.dat Dp)
     → integrate."""
+    axes = _axes(state)
+    g = _gravity(gravity, axes)
     f = spring_forces(state, bonds, k)
-    s = state.join(f, "id", "left").fillna(0.0, ["fx", "fy"])
-    gx, gy = float(gravity[0]), float(gravity[1])
-    fx = F.col("fx") + F.lit(gx) * F.col("m")
-    fy = F.col("fy") + F.lit(gy) * F.col("m")
-    if damping != 0.0:
-        fx = fx - F.lit(damping) * F.abs(fx) * F.signum("vx")
-        fy = fy - F.lit(damping) * F.abs(fy) * F.signum("vy")
-    vx = F.col("vx") + fx / F.col("m") * dt
-    vy = F.col("vy") + fy / F.col("m") * dt
+    s = state.join(f, "id", "left").fillna(0.0, ["f" + a for a in axes])
+    v = []
+    for a, ga in zip(axes, g):
+        fa = F.col("f" + a) + F.lit(ga) * F.col("m")
+        if damping != 0.0:
+            fa = fa - F.lit(damping) * F.abs(fa) * F.signum("v" + a)
+        v.append(F.col("v" + a) + fa / F.col("m") * dt)
     return s.select(
         "id",
-        (F.col("x") + vx * dt).alias("x"),
-        (F.col("y") + vy * dt).alias("y"),
-        vx.alias("vx"),
-        vy.alias("vy"),
+        *[(F.col(a) + va * dt).alias(a) for a, va in zip(axes, v)],
+        *[va.alias("v" + a) for a, va in zip(axes, v)],
         "m",
     )
 
@@ -428,7 +664,7 @@ def run_solver(
     n_out: int = 0,
     out_path: str | None = None,
     fuse: int = 1,
-    gravity: tuple[float, float] = (0.0, 0.0),
+    gravity: tuple[float, ...] | None = None,
     damping: float = 0.0,
 ) -> DataFrame:
     """Advance *n_steps*; optionally append every *n_out*-th state to a
@@ -458,6 +694,9 @@ def run_solver(
     return state
 
 
+# --- halo-exchange block solvers ------------------------------------------
+
+
 def run_solver_blocked(
     state: DataFrame,
     bonds: DataFrame,
@@ -469,7 +708,7 @@ def run_solver_blocked(
     reach: float | None = None,
     bcs: tuple[BoundaryCondition, ...] | None = None,
     step0: int = 0,
-    gravity: tuple[float, float] = (0.0, 0.0),
+    gravity: tuple[float, ...] | None = None,
     damping: float = 0.0,
     gravity_curve: tuple[tuple[float, float], ...] | None = None,
     force_law=None,
@@ -490,7 +729,9 @@ def run_solver_blocked(
     ``fuse`` steps; the inner loop runs at NumPy speed. This mirrors
     the reference's own OpenMP shared-memory decomposition
     (``CORENUM.txt``) — blocks map to executor cores, halos replace
-    shared memory.
+    shared memory. In 3D each block replicates from 26 neighbours (2D:
+    8); the halo filter trims replicas to the band that can influence
+    the block.
 
     *block* (cell edge) defaults to 4× the halo width; *reach*
     defaults to 1.5 × the max bond rest length (stretch safety).
@@ -503,7 +744,9 @@ def run_solver_blocked(
     stays global across bursts). BC masks depend only on particle
     positions, which are bit-exact inside the halo, so every replica
     reaches the same verdict and the halo invariant is unchanged.
+    *gravity* is a vector with one component per axis of *state*.
     """
+    _gravity(gravity, _axes(state))  # fail before any Spark work
     # checkpoint BEFORE the reach agg: deriving reach is an action, and
     # on an un-checkpointed bond relation it re-ran the whole bond
     # build (q64's grid proximity join) a second time for the first
@@ -545,226 +788,34 @@ def blocked_round(
     halo: float,
     bcs: tuple[BoundaryCondition, ...] | None = None,
     step0: int = 0,
-    gravity: tuple[float, float] = (0.0, 0.0),
+    gravity: tuple[float, ...] | None = None,
     damping: float = 0.0,
     gravity_curve: tuple[tuple[float, float], ...] | None = None,
     force_law=None,
 ) -> DataFrame:
     """One halo-exchange round (the loop body of the block solver),
-    lazily built: block assignment + 3×3 halo replication, local bond
+    lazily built: block assignment + 3^D halo replication, local bond
     extraction, then *burst* Euler sub-steps in one cogrouped NumPy
-    kernel. Exposed separately so the captured plan (PLANS.md q64)
-    shows the per-round shape: ONE FlatMapCoGroupsInPandas whose two
-    inputs hash-partition on the block key — `burst` whole physics
-    steps per shuffle round.
-
-    Per-sub-step force order (mirrored exactly by the DuckDB oracles):
-    spring forces (per-bond ``k`` column if present, else scalar *k*) →
-    gravity ``g·m`` (MLS00con.dat Gx/Gy) → force/nonreflection BCs →
-    local damping ``f -= Dp·|f|·sign(v)`` per component (MLS00con.dat
-    Dp — the shipped uniaxial case runs Dp=0.6) → integrate → \
-    acceleration/velocity BCs → advance positions. Gravity, damping and
-    the BC masks are all per-particle-local, so the halo invariant is
-    untouched."""
-    import pandas as pd
-
-    gx, gy = float(gravity[0]), float(gravity[1])
-    has_k = "k" in bonds.columns
-    out_schema = (
-        "id long, x double, y double, vx double, vy double, m double"
+    kernel (``_make_kernel`` documents the per-sub-step force order).
+    Exposed separately so the captured plan (PLANS.md q64) shows the
+    per-round shape: ONE FlatMapCoGroupsInPandas whose two inputs
+    hash-partition on the block key — `burst` whole physics steps per
+    shuffle round."""
+    axes = _axes(state)
+    bond_cols = ["rest"] + (["k"] if "k" in bonds.columns else [])
+    rep, eb, keys = _halo_relations(state, bonds, bond_cols, block, halo, axes)
+    kernel = _make_kernel(
+        axes, bond_cols, False, burst, step0, k, dt,
+        force_law if force_law is not None else linear_spring_law,
+        bcs, _gravity(gravity, axes), gravity_curve, damping,
     )
-
-    def make_kernel(burst: int):
-        def kernel(parts: pd.DataFrame, local_bonds: pd.DataFrame):
-            if parts.empty:
-                return pd.DataFrame(
-                    columns=["id", "x", "y", "vx", "vy", "m", "owned"]
-                )
-            import numpy as np
-
-            ids = parts["id"].to_numpy()
-            x = parts["x"].to_numpy(dtype=np.float64).copy()
-            y = parts["y"].to_numpy(dtype=np.float64).copy()
-            vx = parts["vx"].to_numpy(dtype=np.float64).copy()
-            vy = parts["vy"].to_numpy(dtype=np.float64).copy()
-            m = parts["m"].to_numpy(dtype=np.float64)
-            if local_bonds.empty:
-                src = dst = np.empty(0, dtype=np.int64)
-                rest = np.empty(0, dtype=np.float64)
-                kk: object = k
-            else:
-                # vectorized id -> row-index mapping (sorted ids +
-                # searchsorted): same values as the old per-bond dict
-                # lookup, ~4x faster per round (r15 microbench)
-                order = np.argsort(ids, kind="stable")
-                sorted_ids = ids[order]
-                src = order[
-                    _checked_positions(
-                        sorted_ids,
-                        local_bonds["src"].to_numpy(dtype=np.int64),
-                    )
-                ]
-                dst = order[
-                    _checked_positions(
-                        sorted_ids,
-                        local_bonds["dst"].to_numpy(dtype=np.int64),
-                    )
-                ]
-                rest = local_bonds["rest"].to_numpy(dtype=np.float64)
-                kk = (
-                    local_bonds["k"].to_numpy(dtype=np.float64)
-                    if has_k
-                    else k
-                )
-            law = force_law if force_law is not None else linear_spring_law
-            alive = np.ones(len(src), dtype=bool)
-            ustate = np.zeros(len(src), dtype=np.float64)
-            for s_i in range(burst):
-                dx = x[dst] - x[src]
-                dy = y[dst] - y[src]
-                dist = np.sqrt(dx * dx + dy * dy)
-                # pluggable constitutive law (UDM analog); the
-                # non-breaking solver ignores any break verdict and does
-                # not persist ustate past the burst — laws with damage
-                # memory belong in run_solver_blocked_breaking
-                mag, _jb, ustate = law(dist, rest, kk, None, ustate, alive)
-                fx = np.zeros_like(x)
-                fy = np.zeros_like(y)
-                np.add.at(fx, src, mag * dx)
-                np.add.at(fy, src, mag * dy)
-                np.add.at(fx, dst, -mag * dx)
-                np.add.at(fy, dst, -mag * dy)
-                # MLSLD00.dat boundary conditions, per sub-step: masks
-                # use start-of-step positions (pre-integration), curve
-                # scale uses the global end-of-step time — identical in
-                # every halo replica
-                t_now = (step0 + s_i + 1) * dt
-                if gx != 0.0 or gy != 0.0:
-                    g_s = _curve_scale(gravity_curve, t_now)
-                    fx += gx * g_s * m
-                    fy += gy * g_s * m
-                if bcs:
-                    _apply_force_bcs(bcs, x, y, vx, vy, fx, fy, t_now)
-                if damping != 0.0:
-                    fx -= damping * np.abs(fx) * np.sign(vx)
-                    fy -= damping * np.abs(fy) * np.sign(vy)
-                vx += fx / m * dt
-                vy += fy / m * dt
-                if bcs:
-                    _apply_velocity_bcs(bcs, x, y, vx, vy, t_now, dt)
-                x += vx * dt
-                y += vy * dt
-            return pd.DataFrame(
-                {
-                    "id": ids,
-                    "x": x,
-                    "y": y,
-                    "vx": vx,
-                    "vy": vy,
-                    "m": m,
-                    "owned": parts["owned"].to_numpy(),
-                }
-            )
-
-        return kernel
-
-    # 1. owner block + 3×3 halo replication (halo < block by design)
-    bxc = F.floor(F.col("x") / F.lit(block))
-    byc = F.floor(F.col("y") / F.lit(block))
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ]
-    )
-    rep = (
-        state.withColumn("__bx", bxc)
-        .withColumn("__by", byc)
-        .withColumn("__o", F.explode(offs))
-        .withColumn("bx", F.col("__bx") + F.col("__o.dx"))
-        .withColumn("by", F.col("__by") + F.col("__o.dy"))
-        .withColumn(
-            "owned", (F.col("__o.dx") == 0) & (F.col("__o.dy") == 0)
-        )
-        # keep a halo copy only if the particle lies within `halo`
-        # of the target block's expanded bounds
-        .filter(
-            F.col("owned")
-            | (
-                (F.col("x") >= F.col("bx") * block - halo)
-                & (F.col("x") < (F.col("bx") + 1) * block + halo)
-                & (F.col("y") >= F.col("by") * block - halo)
-                & (F.col("y") < (F.col("by") + 1) * block + halo)
-            )
-        )
-        .select("id", "x", "y", "vx", "vy", "m", "bx", "by", "owned")
-    )
-    # 2. bonds whose BOTH ends live in the same block replica — derived
-    # directly from endpoint positions (r16, guide §2.3/§3): join the
-    # 1x state relation twice (src/dst positions), enumerate the 3x3
-    # candidate blocks around the src owner, and re-apply rep's EXACT
-    # membership predicate to both endpoints (owner match, or in-halo
-    # AND within +-1 of the endpoint's own owner — the explode bound).
-    # Identical (bond, block) set to the old double join against the
-    # 9x-exploded rep, with 9x smaller join inputs and rep no longer
-    # computed three times per round.
-    sp = state.select(
-        F.col("id").alias("src"),
-        F.col("x").alias("__sx"),
-        F.col("y").alias("__sy"),
-    )
-    dp = state.select(
-        F.col("id").alias("dst"),
-        F.col("x").alias("__dx"),
-        F.col("y").alias("__dy"),
-    )
-
-    def _in_halo(xc, yc):
-        return (
-            (xc >= F.col("bx") * block - halo)
-            & (xc < (F.col("bx") + 1) * block + halo)
-            & (yc >= F.col("by") * block - halo)
-            & (yc < (F.col("by") + 1) * block + halo)
-        )
-
-    sxc, syc = F.col("__sx"), F.col("__sy")
-    dxc, dyc = F.col("__dx"), F.col("__dy")
-    dobx = F.floor(dxc / F.lit(block))
-    doby = F.floor(dyc / F.lit(block))
-    mem_s = (
-        (F.col("__o.dx") == 0) & (F.col("__o.dy") == 0)
-    ) | _in_halo(sxc, syc)
-    mem_d = ((dobx == F.col("bx")) & (doby == F.col("by"))) | (
-        _in_halo(dxc, dyc)
-        & (F.abs(F.col("bx") - dobx) <= 1)
-        & (F.abs(F.col("by") - doby) <= 1)
-    )
-    eb = (
-        bonds.join(sp, "src")
-        .join(dp, "dst")
-        .withColumn("__o", F.explode(offs))
-        .withColumn("bx", F.floor(sxc / F.lit(block)) + F.col("__o.dx"))
-        .withColumn("by", F.floor(syc / F.lit(block)) + F.col("__o.dy"))
-        .filter(mem_s & mem_d)
-        .select(
-            "src",
-            "dst",
-            "rest",
-            *(["k"] if has_k else []),
-            "bx",
-            "by",
-        )
-    )
-    # 3. `burst` sub-steps inside one cogrouped Arrow batch per block
+    cols = _state_cols(axes)
     stepped = (
-        rep.groupBy("bx", "by")
-        .cogroup(eb.groupBy("bx", "by"))
-        .applyInPandas(
-            make_kernel(burst), schema=out_schema + ", owned boolean"
-        )
+        rep.groupBy(*keys)
+        .cogroup(eb.groupBy(*keys))
+        .applyInPandas(kernel, schema=_schema([*cols, "owned"]))
     )
-    return stepped.filter("owned").select("id", "x", "y", "vx", "vy", "m")
+    return stepped.filter("owned").select(*cols)
 
 
 def run_solver_blocked_breaking(
@@ -779,7 +830,7 @@ def run_solver_blocked_breaking(
     reach: float | None = None,
     step0: int = 0,
     bcs: tuple[BoundaryCondition, ...] | None = None,
-    gravity: tuple[float, float] = (0.0, 0.0),
+    gravity: tuple[float, ...] | None = None,
     damping: float = 0.0,
     gravity_curve: tuple[tuple[float, float], ...] | None = None,
     bond_law=None,
@@ -805,6 +856,12 @@ def run_solver_blocked_breaking(
     to every bond (the homogeneous pre-round-6 behavior; pass
     ``strain_limit=None`` only with a strength column present).
 
+    Persistent per-bond constitutive state (the UDM ``ustate`` slot)
+    rides the bond relation across halo-exchange rounds exactly like
+    ``alive``/``break_step``: the kernel returns each surviving bond's
+    updated ``ustate`` and the next round re-reads it, so rate/damage
+    laws observe one unbroken history across shuffle boundaries.
+
     ``reach`` defaults to ``(1 + max strength) × max rest × 1.05``: a
     live bond can never be longer (anything longer has broken), so the
     halo invariant survives stretching.
@@ -816,10 +873,8 @@ def run_solver_blocked_breaking(
     pass ``step0`` = steps already simulated so logged break steps stay
     global, not burst-relative.
     """
-    import numpy as np
-    import pandas as pd
-
-    gx, gy = float(gravity[0]), float(gravity[1])
+    axes = _axes(state)
+    gravity = _gravity(gravity, axes)
     has_strength = "strength" in bonds.columns
     has_k = "k" in bonds.columns
     if not has_strength:
@@ -843,9 +898,7 @@ def run_solver_blocked_breaking(
     # checkpoint BEFORE the reach agg (same reason as run_solver_blocked:
     # the agg is an action and would otherwise re-run the caller's bond
     # build — q107's grid join — a second time for round 1)
-    bonds = bonds.select(
-        "src", "dst", "rest", "strength", "k", "ustate"
-    ).localCheckpoint(eager=False)
+    bonds = bonds.select(*_BOND_COLS).localCheckpoint(eager=False)
     if reach is None:
         if bond_law is not None:
             raise ValueError(
@@ -863,230 +916,19 @@ def run_solver_blocked_breaking(
     if block is None:
         block = 4.0 * halo
 
-    out_schema = (
-        "kind int, id long, x double, y double, vx double, vy double, "
-        "m double, owned boolean, src long, dst long, rest double, "
-        "strength double, k double, break_step long, ustate double"
-    )
-
-    def make_kernel(burst: int, step0: int):
-        def kernel(parts: pd.DataFrame, local_bonds: pd.DataFrame):
-            cols = [
-                "kind", "id", "x", "y", "vx", "vy", "m", "owned",
-                "src", "dst", "rest", "strength", "k", "break_step",
-                "ustate",
-            ]
-            if parts.empty:
-                return pd.DataFrame(columns=cols)
-            ids = parts["id"].to_numpy()
-            x = parts["x"].to_numpy(dtype=np.float64).copy()
-            y = parts["y"].to_numpy(dtype=np.float64).copy()
-            vx = parts["vx"].to_numpy(dtype=np.float64).copy()
-            vy = parts["vy"].to_numpy(dtype=np.float64).copy()
-            m = parts["m"].to_numpy(dtype=np.float64)
-            owned_p = parts["owned"].to_numpy()
-            if local_bonds.empty:
-                src = dst = np.empty(0, dtype=np.int64)
-                rest = np.empty(0, dtype=np.float64)
-                limit = np.empty(0, dtype=np.float64)
-                kb = np.empty(0, dtype=np.float64)
-                ustate = np.empty(0, dtype=np.float64)
-            else:
-                # vectorized id -> row-index mapping, same as
-                # blocked_round (bit-identical to the old dict lookup)
-                order = np.argsort(ids, kind="stable")
-                sorted_ids = ids[order]
-                src = order[
-                    _checked_positions(
-                        sorted_ids,
-                        local_bonds["src"].to_numpy(dtype=np.int64),
-                    )
-                ]
-                dst = order[
-                    _checked_positions(
-                        sorted_ids,
-                        local_bonds["dst"].to_numpy(dtype=np.int64),
-                    )
-                ]
-                rest = local_bonds["rest"].to_numpy(dtype=np.float64)
-                limit = local_bonds["strength"].to_numpy(dtype=np.float64)
-                kb = local_bonds["k"].to_numpy(dtype=np.float64)
-                ustate = local_bonds["ustate"].to_numpy(
-                    dtype=np.float64
-                ).copy()
-            alive = np.ones(len(src), dtype=bool)
-            break_step = np.full(len(src), -1, dtype=np.int64)
-            for s_i in range(burst):
-                dx = x[dst] - x[src]
-                dy = y[dst] - y[src]
-                dist = np.sqrt(dx * dx + dy * dy)
-                # pluggable constitutive law (UDM analog): verdicts and
-                # state updates depend only on bit-exact halo inputs, so
-                # every replica of a bond stays in lockstep
-                mag, just_broke, ustate = law(
-                    dist, rest, kb, limit, ustate, alive
-                )
-                if just_broke is None:
-                    just_broke = np.zeros(len(src), dtype=bool)
-                break_step[just_broke] = step0 + s_i + 1
-                alive &= ~just_broke
-                fx = np.zeros_like(x)
-                fy = np.zeros_like(y)
-                np.add.at(fx, src, mag * dx)
-                np.add.at(fy, src, mag * dy)
-                np.add.at(fx, dst, -mag * dx)
-                np.add.at(fy, dst, -mag * dy)
-                # load-curve BCs, same discipline as blocked_round:
-                # position-only masks, global end-of-step curve time
-                t_now = (step0 + s_i + 1) * dt
-                if gx != 0.0 or gy != 0.0:
-                    g_s = _curve_scale(gravity_curve, t_now)
-                    fx += gx * g_s * m
-                    fy += gy * g_s * m
-                if bcs:
-                    _apply_force_bcs(bcs, x, y, vx, vy, fx, fy, t_now)
-                if damping != 0.0:
-                    fx -= damping * np.abs(fx) * np.sign(vx)
-                    fy -= damping * np.abs(fy) * np.sign(vy)
-                vx += fx / m * dt
-                vy += fy / m * dt
-                if bcs:
-                    _apply_velocity_bcs(bcs, x, y, vx, vy, t_now, dt)
-                x += vx * dt
-                y += vy * dt
-            p_out = pd.DataFrame(
-                {
-                    "kind": 0,
-                    "id": ids,
-                    "x": x, "y": y, "vx": vx, "vy": vy, "m": m,
-                    "owned": owned_p,
-                    "src": -1, "dst": -1, "rest": 0.0, "strength": 0.0,
-                    "k": 0.0,
-                    "break_step": -1,
-                    "ustate": 0.0,
-                }
-            )
-            # exactly-once bond emission: the replica owning `src` reports
-            emit = (
-                np.array([bool(owned_p[s]) for s in src])
-                if len(src)
-                else np.empty(0, dtype=bool)
-            )
-            b_out = pd.DataFrame(
-                {
-                    "kind": 1,
-                    "id": -1,
-                    "x": 0.0, "y": 0.0, "vx": 0.0, "vy": 0.0, "m": 0.0,
-                    "owned": True,
-                    "src": (
-                        local_bonds["src"].to_numpy()[emit]
-                        if len(src) else np.empty(0, dtype=np.int64)
-                    ),
-                    "dst": (
-                        local_bonds["dst"].to_numpy()[emit]
-                        if len(src) else np.empty(0, dtype=np.int64)
-                    ),
-                    "rest": rest[emit] if len(src) else np.empty(0),
-                    "strength": limit[emit] if len(src) else np.empty(0),
-                    "k": kb[emit] if len(src) else np.empty(0),
-                    "break_step": (
-                        break_step[emit] if len(src)
-                        else np.empty(0, dtype=np.int64)
-                    ),
-                    "ustate": ustate[emit] if len(src) else np.empty(0),
-                }
-            )
-            return pd.concat([p_out, b_out], ignore_index=True)[cols]
-
-        return kernel
-
-    spark = state.sparkSession
-    log_schema = (
-        "src long, dst long, rest double, strength double, k double, "
-        "break_step long, ustate double"
-    )
-    broken_log = spark.createDataFrame([], log_schema)
-
+    cols = _state_cols(axes)
+    bond_cols = _BOND_COLS[2:]
+    out_schema = _schema(["kind", *cols, "owned", *_LOG_COLS])
+    broken_log = state.sparkSession.createDataFrame([], _schema(_LOG_COLS))
     i = 0
     while i < n_steps:
         burst = min(fuse, n_steps - i)
-        bxc = F.floor(F.col("x") / F.lit(block))
-        byc = F.floor(F.col("y") / F.lit(block))
-        offs = F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx in (-1, 0, 1)
-                for dy in (-1, 0, 1)
-            ]
+        rep, eb, keys = _halo_relations(
+            state, bonds, bond_cols, block, halo, axes
         )
-        rep = (
-            state.withColumn("__bx", bxc)
-            .withColumn("__by", byc)
-            .withColumn("__o", F.explode(offs))
-            .withColumn("bx", F.col("__bx") + F.col("__o.dx"))
-            .withColumn("by", F.col("__by") + F.col("__o.dy"))
-            .withColumn(
-                "owned", (F.col("__o.dx") == 0) & (F.col("__o.dy") == 0)
-            )
-            .filter(
-                F.col("owned")
-                | (
-                    (F.col("x") >= F.col("bx") * block - halo)
-                    & (F.col("x") < (F.col("bx") + 1) * block + halo)
-                    & (F.col("y") >= F.col("by") * block - halo)
-                    & (F.col("y") < (F.col("by") + 1) * block + halo)
-                )
-            )
-            .select("id", "x", "y", "vx", "vy", "m", "bx", "by", "owned")
-        )
-        # bond co-blocks from endpoint positions — same fused form (and
-        # the same exact rep-membership predicate) as blocked_round
-        sp = state.select(
-            F.col("id").alias("src"),
-            F.col("x").alias("__sx"),
-            F.col("y").alias("__sy"),
-        )
-        dp = state.select(
-            F.col("id").alias("dst"),
-            F.col("x").alias("__dx"),
-            F.col("y").alias("__dy"),
-        )
-
-        def _in_halo(xc, yc):
-            return (
-                (xc >= F.col("bx") * block - halo)
-                & (xc < (F.col("bx") + 1) * block + halo)
-                & (yc >= F.col("by") * block - halo)
-                & (yc < (F.col("by") + 1) * block + halo)
-            )
-
-        sxc, syc = F.col("__sx"), F.col("__sy")
-        dxc, dyc = F.col("__dx"), F.col("__dy")
-        dobx = F.floor(dxc / F.lit(block))
-        doby = F.floor(dyc / F.lit(block))
-        mem_s = (
-            (F.col("__o.dx") == 0) & (F.col("__o.dy") == 0)
-        ) | _in_halo(sxc, syc)
-        mem_d = ((dobx == F.col("bx")) & (doby == F.col("by"))) | (
-            _in_halo(dxc, dyc)
-            & (F.abs(F.col("bx") - dobx) <= 1)
-            & (F.abs(F.col("by") - doby) <= 1)
-        )
-        eb = (
-            bonds.join(sp, "src")
-            .join(dp, "dst")
-            .withColumn("__o", F.explode(offs))
-            .withColumn(
-                "bx", F.floor(sxc / F.lit(block)) + F.col("__o.dx")
-            )
-            .withColumn(
-                "by", F.floor(syc / F.lit(block)) + F.col("__o.dy")
-            )
-            .filter(mem_s & mem_d)
-            .select(
-                "src", "dst", "rest", "strength", "k", "ustate",
-                "bx", "by",
-            )
+        kernel = _make_kernel(
+            axes, bond_cols, True, burst, step0 + i, k, dt, law, bcs,
+            gravity, gravity_curve, damping,
         )
         # LAZY checkpoint (r16, guide §1.2/§5): plan truncation happens
         # at checkpoint() call time either way (LogicalRDD), and the
@@ -1095,17 +937,13 @@ def run_solver_blocked_breaking(
         # round's materialization into the caller's final action instead
         # of paying one eager job per round.
         out = (
-            rep.groupBy("bx", "by")
-            .cogroup(eb.groupBy("bx", "by"))
-            .applyInPandas(make_kernel(burst, step0 + i), schema=out_schema)
+            rep.groupBy(*keys)
+            .cogroup(eb.groupBy(*keys))
+            .applyInPandas(kernel, schema=out_schema)
             .localCheckpoint(eager=False)
         )
-        state = out.filter("kind = 0 AND owned").select(
-            "id", "x", "y", "vx", "vy", "m"
-        )
-        bond_rows = out.filter("kind = 1").select(
-            "src", "dst", "rest", "strength", "k", "break_step", "ustate"
-        )
+        state = out.filter("kind = 0 AND owned").select(*cols)
+        bond_rows = out.filter("kind = 1").select(*_LOG_COLS)
         # One-row-per-input-bond contract, loudly: a bond whose length
         # exceeds the halo at round start co-blocks with no replica of
         # its src (eb misses it) and would otherwise vanish from both
@@ -1117,33 +955,19 @@ def run_solver_blocked_breaking(
             bond_rows.select("src", "dst"), ["src", "dst"], "left_anti"
         ).withColumn("break_step", F.lit(step0 + i + 1).cast("long"))
         broken_log = (
-            broken_log.union(
-                bond_rows.filter("break_step >= 0").select(
-                    "src", "dst", "rest", "strength", "k", "break_step",
-                    "ustate",
-                )
-            )
-            .union(
-                dropped.select(
-                    "src", "dst", "rest", "strength", "k", "break_step",
-                    "ustate",
-                )
-            )
+            broken_log.union(bond_rows.filter("break_step >= 0"))
+            .union(dropped.select(*_LOG_COLS))
             .localCheckpoint(eager=False)
         )
         bonds = bond_rows.filter("break_step < 0").select(
-            "src", "dst", "rest", "strength", "k", "ustate"
+            *_BOND_COLS
         ).localCheckpoint(eager=False)
         i += burst
 
-    bond_log = bonds.withColumn(
-        "break_step", F.lit(-1).cast("long")
-    ).select(
-        "src", "dst", "rest", "strength", "k", "break_step", "ustate"
-    ).union(
-        broken_log.select(
-            "src", "dst", "rest", "strength", "k", "break_step", "ustate"
-        )
+    bond_log = (
+        bonds.withColumn("break_step", F.lit(-1).cast("long"))
+        .select(*_LOG_COLS)
+        .union(broken_log)
     )
     keep = ["src", "dst", "rest"]
     if has_strength:
@@ -1152,5 +976,4 @@ def run_solver_blocked_breaking(
         keep.append("k")
     if has_ustate or bond_law is not None:
         keep.append("ustate")
-    bond_log = bond_log.select(*keep, "break_step")
-    return state, bond_log
+    return state, bond_log.select(*keep, "break_step")

@@ -103,6 +103,24 @@ def test_ratchet_code_rev_mismatch_does_not_protect(tmp_path):
     assert json.load(open(full_path)) == new
 
 
+def test_ratchet_dirty_head_prior_does_not_protect(tmp_path):
+    # every uncommitted tree at one HEAD is stamped "<rev>-dirty", so a
+    # matching dirty stamp does not show the prior measured this code
+    full_path = str(tmp_path / "BENCH_FULL.json")
+    clean_prior = _full(
+        0.1, [_attempt(70.0, True, 1.0, 600.0)], 0, head="abc123-dirty"
+    )
+    with open(full_path, "w") as fh:
+        json.dump(clean_prior, fh)
+    att = _attempt(77.0, False, 200.0, 600.0)
+    new = _full(0.1, [att], 0, head="abc123-dirty")
+    published, protected = bench._ratcheted_publish(new, att, full_path)
+    assert protected is None
+    assert published is att
+    assert json.load(open(full_path)) == new
+    assert not os.path.exists(str(tmp_path / "BENCH_FULL_dirty.json"))
+
+
 def test_ratchet_headless_prior_does_not_protect(tmp_path):
     # pre-r16 artifacts carry no "head" stamp: code identity is
     # unknown, so protection must not fire from them

@@ -900,3 +900,23 @@ def test_kelvin_voigt_dashpot_opposes_rate():
     assert mag[1] < spring  # recoiling: dashpot subtracts
     assert abs(mag[2] - spring) < 1e-15  # sentinel: pure spring
     assert np.allclose(u2, dist)  # state advances to current length
+
+
+def test_checked_positions_empty_ids_raise_keyerror():
+    """A block with no particles holds none of the wanted ids: the
+    halo-invariant KeyError names them (not an IndexError from
+    indexing the empty id array)."""
+    import numpy as np
+
+    from columnarmodeling_spark.simulation.solver import _checked_positions
+
+    with pytest.raises(KeyError, match=r"\[5, 7\]"):
+        _checked_positions(np.array([], np.int64), np.array([5, 7]))
+    assert _checked_positions(
+        np.array([], np.int64), np.array([], np.int64)
+    ).size == 0
+    with pytest.raises(KeyError, match=r"\[4\]"):
+        _checked_positions(np.array([1, 3, 5]), np.array([3, 4]))
+    assert _checked_positions(
+        np.array([1, 3, 5]), np.array([5, 1])
+    ).tolist() == [2, 0]
